@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main (driver contract): runs every declared query on
   * SPARK_GRAFT_SF_DIR, prints ONE JSON line with per-query seconds.
   *
@@ -15,18 +13,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Functions.registerAll(spark)
+    val spark = Engine.session(master = s"local[$cpus]")
 
     val failed = scala.collection.mutable.ListBuffer.empty[String]
 
@@ -79,10 +66,8 @@ object Bench {
     // what's-wrong 3)
     val rebuild =
       if (!names.contains("q165_sim_index_build")) Nil
-      else {
-        spark.conf.set(graft.sources.SimIndex.RebuildKey, "true")
-        try Seq("q165_sim_index_build_rebuild" -> exec("q165_sim_index_build"))
-        finally spark.conf.unset(graft.sources.SimIndex.RebuildKey)
+      else Engine.withConf(spark, graft.sources.SimIndex.RebuildKey -> "true") {
+        Seq("q165_sim_index_build_rebuild" -> exec("q165_sim_index_build"))
       }
     val results = sweep ++ rebuild
     // 3-decimal seconds: millisecond resolution is all the comparison

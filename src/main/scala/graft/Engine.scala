@@ -1,6 +1,9 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.SparkStrategy
 
 /** Session factory + fixture-table access for the graft engine.
   *
@@ -14,7 +17,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Engine {
 
-  /** Build the engine's SparkSession. Idempotent (getOrCreate). */
+  /** Build the engine's SparkSession and [[install]] the engine into
+    * it. Idempotent (getOrCreate). Every main builds its session here;
+    * only ExtensionsDemo builds its own, to prove the
+    * `spark.sql.extensions` path.
+    */
   def session(master: String = "local[32]", appName: String = "graft"): SparkSession = {
     val b = SparkSession
       .builder()
@@ -46,46 +53,83 @@ object Engine {
       .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
     val spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    Functions.registerAll(spark)
-    // extensions only apply at session construction; wire the engine's
-    // optimizer rules into pre-existing sessions too
-    registerOptimization(spark, SimplifyEndsWithSource)
-    registerOptimization(spark, BandedLevenshtein)
-    registerOptimization(spark, plans.BucketIntervalJoin)
-    registerOptimization(spark, plans.MvRewrite)
-    registerOptimization(spark, plans.AsofPushDown)
-    registerStrategy(spark, plans.AsofJoinStrategy)
-    spark
+    install(spark)
   }
 
-  /** Idempotent, THREAD-SAFE registration of an experimental optimizer
-    * rule. The raw pattern — check `extraOptimizations.contains` then
-    * reassign the Seq — is a non-atomic check-then-act on a plain var:
-    * two threads planning concurrently on one session could interleave
-    * and drop a registration (an "unplanned AsofJoin" planner error) or
-    * duplicate a rule entry (ADVICE r12). Every engine registration
-    * site funnels through these two helpers, which serialize on the
-    * session's `experimental` holder — the object that owns the var.
+  /** The engine's optimizer rules, in batch order. [[install]] appends
+    * them to `experimental.extraOptimizations` (the "User Provided
+    * Optimizers" batch); [[GraftExtensions]] injects the same list.
     */
-  def registerOptimization(s: SparkSession,
-      rule: org.apache.spark.sql.catalyst.rules.Rule[
-        org.apache.spark.sql.catalyst.plans.logical.LogicalPlan]): Unit =
-    s.experimental.synchronized {
-      if (!s.experimental.extraOptimizations.contains(rule))
-        s.experimental.extraOptimizations =
-          s.experimental.extraOptimizations :+ rule
-    }
+  private[graft] val optimizerRules: Seq[Rule[LogicalPlan]] = Seq(
+    SimplifyEndsWithSource,
+    BandedLevenshtein,
+    // structural rewrite: interval joins -> time-bucketed layout
+    // (opt-in via spark.graft.bucketIntervalJoin.enabled; see q183/q184)
+    plans.BucketIntervalJoin,
+    // opt-in via spark.graft.mvRewrite.enabled (the MV-answered queries
+    // scope it with withConf)
+    plans.MvRewrite,
+    // probe-side predicate pushdown through the native as-of join
+    plans.AsofPushDown)
 
-  /** Thread-safe twin of [[registerOptimization]] for planner
-    * strategies ([[plans.AsofJoinStrategy]]).
+  /** The engine's planner strategies: the native as-of join. */
+  private[graft] val strategies: Seq[SparkStrategy] = Seq(plans.AsofJoinStrategy)
+
+  /** Name of the snapshot-store SQL catalog [[install]] registers. Its
+    * base is the standing-artifact root, so every store the engine
+    * builds resolves as `graft_snap.<store dir>`.
     */
-  def registerStrategy(s: SparkSession,
-      strategy: org.apache.spark.sql.execution.SparkStrategy): Unit =
-    s.experimental.synchronized {
-      if (!s.experimental.extraStrategies.contains(strategy))
-        s.experimental.extraStrategies =
-          s.experimental.extraStrategies :+ strategy
+  private[graft] val SnapshotCatalogName = "graft_snap"
+
+  private val installed = java.util.Collections.synchronizedSet(
+    java.util.Collections.newSetFromMap(
+      new java.util.WeakHashMap[SparkSession, java.lang.Boolean]))
+
+  /** Install the engine into a session: the SQL functions
+    * ([[graft.functions.Scalars.sqlFunctions]]), [[optimizerRules]],
+    * [[strategies]] and the [[SnapshotCatalogName]] catalog. Idempotent and
+    * thread-safe: a per-session marker makes a repeat call one set
+    * lookup, and the first call registers under the session's
+    * `experimental` holder, the object that owns the rule vars, so
+    * concurrent planners can neither drop nor duplicate a rule. A
+    * catalog already configured under the same name is left alone.
+    * Returns the session.
+    */
+  def install(s: SparkSession): SparkSession = {
+    if (!installed.contains(s)) s.experimental.synchronized {
+      if (!installed.contains(s)) {
+        val registry = s.sessionState.functionRegistry
+        graft.functions.Scalars.sqlFunctions.foreach { case (name, _, build) =>
+          registry.createOrReplaceTempFunction(name, build, "built-in")
+        }
+        val x = s.experimental
+        x.extraOptimizations ++= optimizerRules.filterNot(x.extraOptimizations.contains)
+        x.extraStrategies ++= strategies.filterNot(x.extraStrategies.contains)
+        val catalogKey = s"spark.sql.catalog.$SnapshotCatalogName"
+        if (s.conf.getOption(catalogKey).isEmpty) {
+          s.conf.set(catalogKey, classOf[sources.SnapshotCatalog].getName)
+          s.conf.set(s"$catalogKey.base", sources.StandingIndex.artifactBase)
+        }
+        installed.add(s)
+      }
     }
+    s
+  }
+
+  /** Run an EAGER body with session confs set, then restore each key to
+    * its previous explicit value, or unset it if it had none, however
+    * the body exits. A lazy DataFrame returned from the body would plan
+    * after the restore, so the body must execute (or materialize) what
+    * it needs under the scope.
+    */
+  def withConf[A](s: SparkSession, kvs: (String, String)*)(body: => A): A = {
+    val prev = s.conf.getAll
+    kvs.foreach { case (k, v) => s.conf.set(k, v) }
+    try body
+    finally kvs.foreach { case (k, _) =>
+      prev.get(k).fold(s.conf.unset(k))(s.conf.set(k, _))
+    }
+  }
 
   /** Conf key: when "true", [[materialize]] uses RELIABLE checkpoints
     * (persisted to [[CheckpointDirKey]] / the context's checkpoint dir)

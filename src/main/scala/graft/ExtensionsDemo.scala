@@ -4,8 +4,10 @@ import org.apache.spark.sql.SparkSession
 
 /** Fresh-JVM proof that the engine installs purely via
   * `spark.sql.extensions=graft.GraftExtensions`: the custom functions
-  * resolve in plain spark.sql with NO registerAll call, and the injected
-  * optimizer rule folds empty-url ends_with_source at plan time.
+  * resolve in plain spark.sql with NO Engine.install call, and the
+  * injected optimizer rule folds empty-url ends_with_source at plan
+  * time. The one main that keeps its own session builder, since that
+  * builder is what it proves.
   *
   * Usage: sbt "runMain graft.ExtensionsDemo"
   */
@@ -42,15 +44,15 @@ object ExtensionsDemo {
       """SELECT misra_gries(v, 3) AS mg,
         |  element_at(count_min(v), 1) >= 0 AS cm,
         |  bounded_top_k(named_struct('score', CAST(id AS DOUBLE), 'id', id), 2) AS tk,
-        |  size(union_find(id, id + 1)) > 0 AS uf
+        |  size(union_find(id, id + 1)) > 0 AS uf,
+        |  size(kmv_sample(struct(stable_hash64(v), id), 2)) AS kmv
         |FROM (SELECT id, CAST(id % 3 AS STRING) AS v FROM range(50))""".stripMargin)
     val arow = a.head()
     println(s"AGGREGATES mg=${arow.getSeq[String](0).sorted.mkString(",")} " +
-      s"cm=${arow.get(1)} tk=${arow.get(2)} uf=${arow.get(3)}")
-    // the injected PLANNER STRATEGY: plan an AsofJoin node built
-    // directly (Asof.node, NOT Asof.join — join would self-register the
-    // strategy and mask a broken injection); succeeding here proves
-    // injectPlannerStrategy wired AsofJoinStrategy into this session
+      s"cm=${arow.get(1)} tk=${arow.get(2)} uf=${arow.get(3)} kmv=${arow.get(4)}")
+    // the injected PLANNER STRATEGY: planning an AsofJoin node here
+    // proves injectPlannerStrategy wired AsofJoinStrategy into this
+    // session
     import org.apache.spark.sql.functions.{col, expr}
     val probes = spark.range(4).select(col("id").as("event_id"),
       (col("id") % 2).as("k"), expr("timestamp_seconds(id * 100)").as("ts"))

@@ -75,92 +75,19 @@ object BandedLevenshtein extends Rule[LogicalPlan] {
   * any Spark deployment via
   * `--conf spark.sql.extensions=graft.GraftExtensions` — all custom
   * functions become session builtins and the engine's optimizer rules
-  * are injected, no code changes required (the standard extension-
-  * library mechanism, e.g. how Delta/Iceberg register).
-  *
-  * Engine.session also wires [[SimplifyEndsWithSource]] into existing
-  * sessions through experimental.extraOptimizations (extensions only
-  * apply at session construction).
+  * and planner strategy are injected, no code changes required (the
+  * standard extension-library mechanism, e.g. how Delta/Iceberg
+  * register). It reads the same tables as [[Engine.install]]:
+  * [[Scalars.sqlFunctions]], [[Engine.optimizerRules]] and
+  * [[Engine.strategies]].
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  private def info(name: String, clazz: Class[_]): ExpressionInfo =
-    new ExpressionInfo(clazz.getCanonicalName, name)
-
   override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction((FunctionIdentifier("slugify"),
-      info("slugify", classOf[Slugify]), Scalars.checked("slugify", 1)(es => Slugify(es.head))))
-    e.injectFunction((FunctionIdentifier("extract_iso_date"),
-      info("extract_iso_date", classOf[ExtractIsoDate]),
-      Scalars.checked("extract_iso_date", 1)(es => ExtractIsoDate(es.head))))
-    e.injectFunction((FunctionIdentifier("fmt_month_abbrev"),
-      info("fmt_month_abbrev", classOf[FmtMonthAbbrev]),
-      Scalars.checked("fmt_month_abbrev", 1)(es => FmtMonthAbbrev(es.head))))
-    e.injectFunction((FunctionIdentifier("html_escape"),
-      info("html_escape", classOf[HtmlEscape]), Scalars.checked("html_escape", 1)(es => HtmlEscape(es.head))))
-    e.injectFunction((FunctionIdentifier("clean_ws"),
-      info("clean_ws", classOf[CleanWs]), Scalars.checked("clean_ws", 1)(es => CleanWs(es.head))))
-    e.injectFunction((FunctionIdentifier("ends_with_source"),
-      info("ends_with_source", classOf[EndsWithSource]),
-      Scalars.checked("ends_with_source", 3)(es => EndsWithSource(es(0), es(1), es(2)))))
-    e.injectFunction((FunctionIdentifier("stable_hash64"),
-      info("stable_hash64", classOf[StableHash64]),
-      Scalars.checked("stable_hash64", 1)(es => StableHash64(es.head))))
-    e.injectFunction((FunctionIdentifier("min_gram_hash"),
-      info("min_gram_hash", classOf[MinGramHash]),
-      Scalars.checked("min_gram_hash", 1)(es => MinGramHash(es.head))))
-    e.injectFunction((FunctionIdentifier("min_rolling_hash"),
-      info("min_rolling_hash", classOf[MinRollingHash]),
-      Scalars.checked("min_rolling_hash", 1)(es => MinRollingHash(es.head))))
-    e.injectFunction((FunctionIdentifier("distinct_shingles3"),
-      info("distinct_shingles3", classOf[DistinctShingles3]),
-      Scalars.checked("distinct_shingles3", 1)(es => DistinctShingles3(es.head))))
-    e.injectFunction((FunctionIdentifier("shingles2"),
-      info("shingles2", classOf[Shingles2]),
-      Scalars.checked("shingles2", 1)(es => Shingles2(es.head))))
-    e.injectFunction((FunctionIdentifier("simhash60"),
-      info("simhash60", classOf[Simhash60]),
-      Scalars.checked("simhash60", 1)(es => Simhash60(es.head))))
-    e.injectFunction((FunctionIdentifier("minhash8"),
-      info("minhash8", classOf[Minhash8]),
-      Scalars.checked("minhash8", 1)(es => Minhash8(es.head))))
-    e.injectFunction((FunctionIdentifier("token_max_run"),
-      info("token_max_run", classOf[TokenMaxRun]),
-      Scalars.checked("token_max_run", 1)(es => TokenMaxRun(es.head))))
-    e.injectFunction((FunctionIdentifier("token_top_count"),
-      info("token_top_count", classOf[TokenTopCount]),
-      Scalars.checked("token_top_count", 1)(es => TokenTopCount(es.head))))
-    e.injectFunction((FunctionIdentifier("cosine_sim"),
-      info("cosine_sim", classOf[CosineSim]),
-      Scalars.checked("cosine_sim", 2)(es => CosineSim(es(0), es(1)))))
-    e.injectFunction((FunctionIdentifier("hyperplane_bucket64"),
-      info("hyperplane_bucket64", classOf[HyperplaneBucket64]),
-      Scalars.checked("hyperplane_bucket64", 1)(es => HyperplaneBucket64(es.head))))
-    // sketch/top-k aggregates — same SQL surface as Functions.registerAll
-    e.injectFunction((FunctionIdentifier("misra_gries"),
-      info("misra_gries", classOf[MisraGriesAgg]),
-      Scalars.checked("misra_gries", 2)(es =>
-        MisraGriesAgg(es(0), Scalars.sqlLitInt(es(1), "misra_gries k"))
-          .toAggregateExpression())))
-    e.injectFunction((FunctionIdentifier("count_min"),
-      info("count_min", classOf[CountMinAgg]),
-      Scalars.checked("count_min", 1)(es => CountMinAgg(es.head).toAggregateExpression())))
-    e.injectFunction((FunctionIdentifier("bounded_top_k"),
-      info("bounded_top_k", classOf[BoundedTopK]),
-      Scalars.checked("bounded_top_k", 2)(es =>
-        BoundedTopK(es(0), Scalars.sqlLitInt(es(1), "bounded_top_k k"))
-          .toAggregateExpression())))
-    e.injectFunction((FunctionIdentifier("union_find"),
-      info("union_find", classOf[UnionFindAgg]),
-      Scalars.checked("union_find", 2)(es => UnionFindAgg(es(0), es(1)).toAggregateExpression())))
-    e.injectOptimizerRule(_ => SimplifyEndsWithSource)
-    e.injectOptimizerRule(_ => BandedLevenshtein)
-    // structural rewrite: interval joins -> time-bucketed layout
-    // (opt-in via spark.graft.bucketIntervalJoin.enabled; see q183/q184)
-    e.injectOptimizerRule(_ => graft.plans.BucketIntervalJoin)
-    e.injectOptimizerRule(_ => graft.plans.MvRewrite)
-    // probe-side predicate pushdown through the native as-of join
-    e.injectOptimizerRule(_ => graft.plans.AsofPushDown)
-    // whole-operator extension: the native as-of join's planner strategy
-    e.injectPlannerStrategy(_ => graft.plans.AsofJoinStrategy)
+    Scalars.sqlFunctions.foreach { case (name, clazz, build) =>
+      e.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(clazz.getCanonicalName, name), build))
+    }
+    Engine.optimizerRules.foreach(rule => e.injectOptimizerRule(_ => rule))
+    Engine.strategies.foreach(strategy => e.injectPlannerStrategy(_ => strategy))
   }
 }

@@ -1,7 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateFunction
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types.{BooleanType, DataType, StringType}
@@ -282,50 +283,59 @@ object Scalars {
   def cosine_sim(a: Column, b: Column): Column = col(CosineSim(ex(a), ex(b)))
   def hyperplane_bucket64(c: Column): Column = col(HyperplaneBucket64(ex(c)))
 
-  def register(spark: SparkSession): Unit = {
-    val r = spark.sessionState.functionRegistry
-    r.createOrReplaceTempFunction("slugify", checked("slugify", 1)(es => Slugify(es.head)), "built-in")
-    r.createOrReplaceTempFunction("extract_iso_date", checked("extract_iso_date", 1)(es => ExtractIsoDate(es.head)), "built-in")
-    r.createOrReplaceTempFunction("fmt_month_abbrev", checked("fmt_month_abbrev", 1)(es => FmtMonthAbbrev(es.head)), "built-in")
-    r.createOrReplaceTempFunction("html_escape", checked("html_escape", 1)(es => HtmlEscape(es.head)), "built-in")
-    r.createOrReplaceTempFunction("clean_ws", checked("clean_ws", 1)(es => CleanWs(es.head)), "built-in")
-    r.createOrReplaceTempFunction("ends_with_source",
-      checked("ends_with_source", 3)(es => EndsWithSource(es(0), es(1), es(2))), "built-in")
-    r.createOrReplaceTempFunction("stable_hash64", checked("stable_hash64", 1)(es => StableHash64(es.head)), "built-in")
-    r.createOrReplaceTempFunction("min_gram_hash", checked("min_gram_hash", 1)(es => MinGramHash(es.head)), "built-in")
-    r.createOrReplaceTempFunction("min_rolling_hash", checked("min_rolling_hash", 1)(es => MinRollingHash(es.head)), "built-in")
-    r.createOrReplaceTempFunction("distinct_shingles3", checked("distinct_shingles3", 1)(es => DistinctShingles3(es.head)), "built-in")
-    r.createOrReplaceTempFunction("shingles2", checked("shingles2", 1)(es => Shingles2(es.head)), "built-in")
-    r.createOrReplaceTempFunction("simhash60", checked("simhash60", 1)(es => Simhash60(es.head)), "built-in")
-    r.createOrReplaceTempFunction("minhash8", checked("minhash8", 1)(es => Minhash8(es.head)), "built-in")
-    r.createOrReplaceTempFunction("token_max_run", checked("token_max_run", 1)(es => TokenMaxRun(es.head)), "built-in")
-    r.createOrReplaceTempFunction("token_top_count", checked("token_top_count", 1)(es => TokenTopCount(es.head)), "built-in")
-    r.createOrReplaceTempFunction("cosine_sim", checked("cosine_sim", 2)(es => CosineSim(es(0), es(1))), "built-in")
-    r.createOrReplaceTempFunction("hyperplane_bucket64", checked("hyperplane_bucket64", 1)(es => HyperplaneBucket64(es.head)), "built-in")
-    // the sketch/top-k AGGREGATES are SQL-callable too — a SQL user of
-    // the engine gets the same surface as the Column API. k arguments
-    // must be foldable integer literals (resolved at plan time).
-    r.createOrReplaceTempFunction("misra_gries",
-      checked("misra_gries", 2)(es => MisraGriesAgg(es(0), sqlLitInt(es(1), "misra_gries k"))
-        .toAggregateExpression()), "built-in")
-    r.createOrReplaceTempFunction("count_min",
-      checked("count_min", 1)(es => CountMinAgg(es.head).toAggregateExpression()), "built-in")
-    r.createOrReplaceTempFunction("bounded_top_k",
-      checked("bounded_top_k", 2)(es => BoundedTopK(es(0), sqlLitInt(es(1), "bounded_top_k k"))
-        .toAggregateExpression()), "built-in")
-    r.createOrReplaceTempFunction("union_find",
-      checked("union_find", 2)(es => UnionFindAgg(es(0), es(1)).toAggregateExpression()), "built-in")
-    r.createOrReplaceTempFunction("kmv_sample",
-      checked("kmv_sample", 2)(es => KmvSample(es(0), sqlLitInt(es(1), "kmv_sample k"))
-        .toAggregateExpression()), "built-in")
-  }
+  /** One SQL function: (name, expression class, builder). */
+  type SqlFunction = (String, Class[_], Seq[Expression] => Expression)
+
+  /** Every engine SQL function, declared once. `Engine.install`
+    * registers this table into a session's function registry and
+    * `GraftExtensions` injects the same table as builtins. The
+    * sketch/top-k AGGREGATES are SQL-callable too, so a SQL user gets
+    * the Column API's surface; their k arguments must be foldable
+    * integer literals (resolved at plan time).
+    */
+  val sqlFunctions: Seq[SqlFunction] = Seq(
+    fn("slugify", classOf[Slugify], 1)(es => Slugify(es.head)),
+    fn("extract_iso_date", classOf[ExtractIsoDate], 1)(es => ExtractIsoDate(es.head)),
+    fn("fmt_month_abbrev", classOf[FmtMonthAbbrev], 1)(es => FmtMonthAbbrev(es.head)),
+    fn("html_escape", classOf[HtmlEscape], 1)(es => HtmlEscape(es.head)),
+    fn("clean_ws", classOf[CleanWs], 1)(es => CleanWs(es.head)),
+    fn("ends_with_source", classOf[EndsWithSource], 3)(es =>
+      EndsWithSource(es(0), es(1), es(2))),
+    fn("stable_hash64", classOf[StableHash64], 1)(es => StableHash64(es.head)),
+    fn("min_gram_hash", classOf[MinGramHash], 1)(es => MinGramHash(es.head)),
+    fn("min_rolling_hash", classOf[MinRollingHash], 1)(es => MinRollingHash(es.head)),
+    fn("distinct_shingles3", classOf[DistinctShingles3], 1)(es => DistinctShingles3(es.head)),
+    fn("shingles2", classOf[Shingles2], 1)(es => Shingles2(es.head)),
+    fn("simhash60", classOf[Simhash60], 1)(es => Simhash60(es.head)),
+    fn("minhash8", classOf[Minhash8], 1)(es => Minhash8(es.head)),
+    fn("token_max_run", classOf[TokenMaxRun], 1)(es => TokenMaxRun(es.head)),
+    fn("token_top_count", classOf[TokenTopCount], 1)(es => TokenTopCount(es.head)),
+    fn("cosine_sim", classOf[CosineSim], 2)(es => CosineSim(es(0), es(1))),
+    fn("hyperplane_bucket64", classOf[HyperplaneBucket64], 1)(es =>
+      HyperplaneBucket64(es.head)),
+    withK("misra_gries", classOf[MisraGriesAgg])(MisraGriesAgg(_, _)),
+    fn("count_min", classOf[CountMinAgg], 1)(es =>
+      CountMinAgg(es.head).toAggregateExpression()),
+    withK("bounded_top_k", classOf[BoundedTopK])(BoundedTopK(_, _)),
+    fn("union_find", classOf[UnionFindAgg], 2)(es =>
+      UnionFindAgg(es(0), es(1)).toAggregateExpression()),
+    withK("kmv_sample", classOf[KmvSample])(KmvSample(_, _)))
+
+  private def fn(name: String, clazz: Class[_], n: Int)(
+      build: Seq[Expression] => Expression): SqlFunction =
+    (name, clazz, checked(name, n)(build))
+
+  /** An aggregate over (value, k) with k a foldable integer literal. */
+  private def withK(name: String, clazz: Class[_])(
+      agg: (Expression, Int) => AggregateFunction): SqlFunction =
+    fn(name, clazz, 2)(es => agg(es(0), sqlLitInt(es(1), s"$name k")).toAggregateExpression())
 
   /** Arity guard for SQL-registry builders: a wrong-argument-count call
     * (`SELECT misra_gries(v)`) must fail at plan time with a message
     * naming the function and the expected arity, not leak a raw
     * IndexOutOfBoundsException from `es(1)`.
     */
-  private[graft] def checked(name: String, n: Int)(
+  private def checked(name: String, n: Int)(
       build: Seq[Expression] => Expression): Seq[Expression] => Expression =
     es => {
       if (es.length != n) throw new IllegalArgumentException(
@@ -337,7 +347,7 @@ object Scalars {
     * Long values outside Int range are an error, not a silent toInt
     * truncation (misra_gries(v, 4294967297) must not become k=1).
     */
-  private[graft] def sqlLitInt(e: Expression, what: String): Int = {
+  private def sqlLitInt(e: Expression, what: String): Int = {
     def narrow(l: Long): Int =
       if (l >= Int.MinValue && l <= Int.MaxValue) l.toInt
       else throw new IllegalArgumentException(

@@ -151,8 +151,7 @@ object AnalyticsOps {
     * 100 TB copy then means comparing 8 manifest rows, not re-reading
     * the corpus. Single map-side-combinable aggregation.
     */
-  val q125ShardManifest: Q = (s, dir) => {
-    graft.Functions.registerAll(s)
+  val q125ShardManifest: Q = (s, dir) =>
     t(s, dir, "documents")
       .withColumn("shard", expr(s"stable_hash64(cast(doc_id as string)) % $NumShards"))
       .withColumn("rh", expr(s"stable_hash64(text) % $ChecksumMod"))
@@ -164,7 +163,6 @@ object AnalyticsOps {
         countDistinct(col("lang")).as("n_langs"),
         sum(col("n_chars")).as("n_chars"))
       .orderBy(col("shard"))
-  }
 
   // ---------------------------------------------------------------
   // q126 — A/B experiment readout
@@ -179,7 +177,6 @@ object AnalyticsOps {
     * the only real shuffle.
     */
   val q126AbTest: Q = (s, dir) => {
-    graft.Functions.registerAll(s)
     val u = t(s, dir, "events")
       .groupBy(col("user_id"))
       .agg(max((col("event_type") === "purchase").cast("int")).as("conv"))

@@ -113,8 +113,7 @@ object Multimodal {
   /** Decoded frame rows with resize targets — q53's derivation, shared
     * with q171's batch packer (which additionally needs `mime`).
     */
-  private def frameRows(s: SparkSession, dir: String): DataFrame = {
-    graft.Functions.registerAll(s)
+  private def frameRows(s: SparkSession, dir: String): DataFrame =
     extractFeatures(mediaTable(s, dir)).toDF()
       .select(col("doc_id"), col("mime"), col("width"), col("height"),
         posexplode(expr("sequence(1, n_frames)")).as(Seq("pos", "frame_no")))
@@ -126,7 +125,6 @@ object Multimodal {
         greatest(lit(1L), floor(col("width") * col("scale"))).cast("int"))
       .withColumn("out_h",
         greatest(lit(1L), floor(col("height") * col("scale"))).cast("int"))
-  }
 
   val q53MediaFrames: (SparkSession, String) => DataFrame = (s, dir) =>
     frameRows(s, dir)

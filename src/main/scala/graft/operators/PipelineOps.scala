@@ -54,7 +54,6 @@ object PipelineOps {
     * carry revised text in the new snapshot ("changed").
     */
   val q87SnapshotDelta: Q = (s, dir) => {
-    graft.Functions.registerAll(s)
     val docs = t(s, dir, "documents")
     val old = docs.filter(col("doc_id") % 13 =!= 5)
       .select(col("doc_id"), expr("stable_hash64(text)").as("old_hash"))
@@ -99,12 +98,10 @@ object PipelineOps {
     * = 'kept', text_hash) — also the INITIAL state of the streaming
     * MERGE (StreamingMergeSpec drives [[applyMergeBatch]] over it).
     */
-  private[graft] def cdcOldSnapshot(s: SparkSession, dir: String): DataFrame = {
-    graft.Functions.registerAll(s)
+  private[graft] def cdcOldSnapshot(s: SparkSession, dir: String): DataFrame =
     t(s, dir, "documents").filter(col("doc_id") % 13 =!= 5)
       .select(col("doc_id"), lit("kept").as("op_applied"),
         expr("stable_hash64(text)").as("text_hash"))
-  }
 
   /** q139's CDC feed: ONLY rows whose state changed (q87's delta minus
     * 'unchanged'), as (doc_id, status, new_hash). Materialized once so
@@ -112,7 +109,6 @@ object PipelineOps {
     * instead of each replaying the manifest full-outer join.
     */
   private[graft] def cdcDeltaFeed(s: SparkSession, dir: String): DataFrame = {
-    graft.Functions.registerAll(s)
     val docs = t(s, dir, "documents")
     val old = docs.filter(col("doc_id") % 13 =!= 5)
       .select(col("doc_id"), expr("stable_hash64(text)").as("old_hash"))
@@ -178,8 +174,7 @@ object PipelineOps {
     * operator is a narrow map over the scan (zero shuffles; the plan
     * is one WholeStageCodegen span over the parquet scan).
     */
-  val q88DatasetSplit: Q = (s, dir) => {
-    graft.Functions.registerAll(s)
+  val q88DatasetSplit: Q = (s, dir) =>
     t(s, dir, "documents")
       .withColumn("h", expr("stable_hash64(concat('split:', doc_id)) % 100"))
       .select(col("doc_id"),
@@ -188,7 +183,6 @@ object PipelineOps {
         expr("stable_hash64(concat('ord:', doc_id)) % 64").as("shard"),
         expr("stable_hash64(concat('ord:', doc_id))").as("ord_key"))
       .orderBy(col("doc_id"))
-  }
 
   // ---------------------------------------------------------------
   // q89 — SCD2 interval history (events as a change feed)
@@ -236,7 +230,6 @@ object PipelineOps {
     * score. quantile = P(score' <= mine) within source, inclusive.
     */
   val q90QuantileNorm: Q = (s, dir) => {
-    graft.Functions.registerAll(s)
     // cached quality manifest: this query references it twice (bucket
     // counts + the join back), so without the cache the regex/stopword
     // scoring scan would run twice
@@ -543,7 +536,6 @@ object PipelineOps {
     * and every aggregation is map-side combinable on `lang`.
     */
   val q106IncrementalAgg: Q = (s, dir) => {
-    graft.Functions.registerAll(s)
     val docs = t(s, dir, "documents")
     def ntok(c: Column): Column =
       size(split(trim(lower(c)), "\\s+")).cast("long")
@@ -609,8 +601,7 @@ object PipelineOps {
     * One map-side-combinable aggregation keyed on the zone id; no
     * joins, no windows.
     */
-  val q107ZoneMap: Q = (s, dir) => {
-    graft.Functions.registerAll(s)
+  val q107ZoneMap: Q = (s, dir) =>
     t(s, dir, "documents")
       .select((col("doc_id") / ZoneDocs).cast("long").as("zone"),
         expr(s"cast(size(split(trim(lower(text)), '\\\\s+')) as bigint)").as("nt"),
@@ -622,7 +613,6 @@ object PipelineOps {
       .withColumn("skippable",
         (col("max_tokens") < ZoneTokenPredicate).cast("bigint"))
       .orderBy(col("zone"))
-  }
 
   // ---------------------------------------------------------------
   // q170 — Z-order layout vs linear sort (multi-dim data skipping)
@@ -774,12 +764,10 @@ object PipelineOps {
     * broadcast of 7 cents values + a map-side `size(filter(...))`
     * count-aggregation keyed by the p partition ids.
     */
-  val q173RangePlanner: Q = (s, dir) => {
-    graft.Functions.registerAll(s)
+  val q173RangePlanner: Q = (s, dir) =>
     rangePlan(t(s, dir, "orders").select(
       col("o_orderkey"),
       expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("v")))
-  }
 
   /** The q173 planning core over an explicit (o_orderkey, v) frame —
     * factored out so PipelineOpsSpec can drive the degenerate inputs
@@ -789,7 +777,6 @@ object PipelineOps {
     */
   private[graft] def rangePlan(rows: DataFrame): DataFrame = {
     val s = rows.sparkSession
-    graft.Functions.registerAll(s)
     val p = RangeParts
     val k = RangeSampleK
     val keyed = rows.select(
@@ -1055,7 +1042,6 @@ object PipelineOps {
     * at real scale) is close enough to stop running it.
     */
   val q135SampledQuantiles: Q = (s, dir) => {
-    graft.Functions.registerAll(s)
     // integer-only sample key: a double rendered into a concat would
     // hostage the hash to each engine's float formatting
     val base = t(s, dir, "lineitem").select(
@@ -1129,7 +1115,6 @@ object PipelineOps {
     * replays the hash threshold exactly.
     */
   val q214CorpusMixture: Q = (s, dir) => {
-    graft.Functions.registerAll(s)
     val docs = t(s, dir, "documents")
       .withColumn("rate_bp", expr(rateBpSql("source")))
       .withColumn("keep",
@@ -1156,7 +1141,6 @@ object PipelineOps {
     * realized multiplier.
     */
   val q215CorpusUpsample: Q = (s, dir) => {
-    graft.Functions.registerAll(s)
     val docs = t(s, dir, "documents")
       .withColumn("frac_bp", expr(rateBpSql("source")))
       .withColumn("extra",

@@ -217,33 +217,24 @@ object MatView {
         .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"))
     }.orderBy(col("lang"))
 
-  /** Shared scoped-conf + self-registration wrapper for the MV
-    * queries: rule registered on bare sessions, flags restored however
-    * the body exits, result materialized UNDER the flags so they never
-    * leak into other queries' optimizations. `mustScan`/`mustNotScan`
-    * are the self-check tokens (the rewrite FIRED: plan reads the
-    * view, not the corpus).
+  /** Shared scoped-conf wrapper for the MV queries: the rewrite flag
+    * is set only while the result materializes, so it never leaks into
+    * other queries' optimizations. `mustScan`/`mustNotScan` are the
+    * self-check tokens (the rewrite FIRED: plan reads the view, not the
+    * corpus).
     */
   private def withRewrite(s: SparkSession, ensure: => Unit,
       mustScan: String, mustNotScan: String)(
       body: => DataFrame): DataFrame = {
     import graft.plans.MvRewrite
-    graft.Engine.registerOptimization(s, MvRewrite)
     ensure
-    val prevEnabled = s.conf.getOption(MvRewrite.EnabledKey)
-    s.conf.set(MvRewrite.EnabledKey, "true")
-    try {
+    graft.Engine.withConf(s, MvRewrite.EnabledKey -> "true") {
       val agg = body
       val scans = MvRewrite.scanLocations(agg.queryExecution.optimizedPlan)
       require(scans.exists(_.contains(mustScan)) &&
         !scans.exists(_.contains(mustNotScan)),
         s"MV rewrite did not fire — the plan still scans the corpus: $scans")
       agg.materialize()
-    } finally {
-      prevEnabled match {
-        case Some(v) => s.conf.set(MvRewrite.EnabledKey, v)
-        case None => s.conf.unset(MvRewrite.EnabledKey)
-      }
     }
   }
 

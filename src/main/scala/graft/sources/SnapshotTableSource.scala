@@ -19,6 +19,8 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
+import SnapshotStore.Utf8Order
+
 /** DataSource V2 over the [[SnapshotStore]] — the piece that makes the
   * table format's manifest-stats pruning available to ANY Spark SQL
   * query instead of only to callers who hand-pick
@@ -1415,12 +1417,13 @@ final class SnapshotScanBuilder(root: String, k: Long, tableSchema: StructType,
     rest.foreach {
       case EqualTo(c, v: String) if catCol.contains(c) =>
         val (l0, h0) = strBounds.getOrElse(c, (v, v))
-        strBounds(c) = (if (v < l0) v else l0, if (v > h0) v else h0)
+        strBounds(c) = (Utf8Order.min(v, l0), Utf8Order.max(v, h0))
       case In(c, vs) if catCol.contains(c) &&
           vs.nonEmpty && vs.forall(_.isInstanceOf[String]) =>
         val ss = vs.map(_.asInstanceOf[String])
-        val (l0, h0) = strBounds.getOrElse(c, (ss.min, ss.max))
-        strBounds(c) = (Seq(ss.min, l0).min, Seq(ss.max, h0).max)
+        val (lo, hi) = (ss.min(Utf8Order), ss.max(Utf8Order))
+        val (l0, h0) = strBounds.getOrElse(c, (lo, hi))
+        strBounds(c) = (Utf8Order.min(lo, l0), Utf8Order.max(hi, h0))
       // identity-partition pruning: equality/IN on the partition
       // column keeps EXACTLY the named values' files — also PRUNE-ONLY
       // (the filter stays residual; contradictory equalities intersect
@@ -1829,7 +1832,8 @@ final class SnapshotScan(root: String, k: Long, tableSchema: StructType,
     // open interval (an all-null-category file is never pruned)
     def liveCat: Boolean = strBounds.forall { case (_, (lo, hi)) =>
       !hasCat || r.isNullAt(r.fieldIndex("min_cat")) || {
-        r.getAs[String]("max_cat") >= lo && r.getAs[String]("min_cat") <= hi
+        Utf8Order.gteq(r.getAs[String]("max_cat"), lo) &&
+          Utf8Order.lteq(r.getAs[String]("min_cat"), hi)
       }
     }
     // identity-partition pruning: exact per-file value membership

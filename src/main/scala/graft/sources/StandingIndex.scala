@@ -67,12 +67,15 @@ object StandingIndex {
     * the families resolving inconsistently.
     */
   private[graft] def artifactRoot(sfDir: String, prefix: String): String = {
-    val root = sys.env.getOrElse("GRAFT_INDEX_DIR",
-      s"${System.getProperty("java.io.tmpdir")}/graft_index")
     val key = java.lang.Long.toHexString(
       scala.util.hashing.MurmurHash3.stringHash(sfDir).toLong & 0xffffffffL)
-    s"$root/${prefix}_$key"
+    s"$artifactBase/${prefix}_$key"
   }
+
+  /** The directory every [[artifactRoot]] lives in. */
+  private[graft] def artifactBase: String =
+    sys.env.getOrElse("GRAFT_INDEX_DIR",
+      s"${System.getProperty("java.io.tmpdir")}/graft_index")
 
   def indexRoot(sfDir: String): String = artifactRoot(sfDir, "idx")
 
@@ -104,7 +107,6 @@ object StandingIndex {
     * the format-free equivalent the plain-parquet fixtures support.
     */
   private[graft] def corpusSig(s: SparkSession, dir: String): (Long, Long) = {
-    graft.Functions.registerAll(s)
     val r = Engine.table(s, dir, "documents")
       .agg(count(lit(1)).cast("long").as("n"),
         coalesce(sum(pmod(expr(LlmOps.hashS(
@@ -196,7 +198,6 @@ object StandingIndex {
     * the artifact.
     */
   private def build(s: SparkSession, dir: String): DataFrame = {
-    graft.Functions.registerAll(s)
     val root = indexRoot(dir)
     val sig = corpusSig(s, dir)
     // ONE artifact write path: the one-shot build IS a single-segment
@@ -227,7 +228,6 @@ object StandingIndex {
     * are read).
     */
   private def bucketsOf(s: SparkSession, terms: Seq[String]): Seq[Long] = {
-    graft.Functions.registerAll(s)
     val row = s.sql("SELECT " + terms.zipWithIndex.map { case (t, i) =>
       s"pmod(stable_hash64('idx:$t'), $NumIndexBuckets) AS b$i"
     }.mkString(", ")).first()
@@ -394,7 +394,6 @@ object StandingIndex {
     * streaming maintenance twin (StreamingIndexSpec).
     */
   private[graft] def writeSegment(d: DataFrame, root: String, mode: String): Unit = {
-    graft.Functions.registerAll(d.sparkSession)
     postingsOf(d)
       .repartition(col("pbucket"))
       // pbucket leads for the same writer-required-ordering reason as
@@ -443,7 +442,6 @@ object StandingIndex {
     // sessions the meta row validates reuse like `ensure` (the
     // two-segment artifact is equally a pure function of the corpus)
     incCache.getOrElseUpdate(s, dir) {
-      graft.Functions.registerAll(s)
       val sig = corpusSig(s, dir)
       if (!metaFresh(s, root, sig)) {
         val docs = Engine.table(s, dir, "documents")

@@ -47,11 +47,9 @@ object TrainingShards {
   val MaxRecordsPerFile = 100L
 
   /** Deterministic, content-derived shard bucket. */
-  def withBucket(df: DataFrame): DataFrame = {
-    graft.Functions.registerAll(df.sparkSession)
+  def withBucket(df: DataFrame): DataFrame =
     df.withColumn("bucket", expr(
       s"stable_hash64(concat('shard:', doc_id)) % $NumBuckets"))
-  }
 
   /** The write-side plan: bucketed rows, REBALANCE-exchanged on the
     * partition keys so write parallelism tracks data volume (AQE splits

@@ -27,17 +27,8 @@ class BucketStoreSpec extends AnyFunSuite {
   private def exchanges(df: org.apache.spark.sql.DataFrame): Int =
     plan(df).split("Exchange").length - 1
 
-  private def withConf[A](pairs: (String, String)*)(f: => A): A = {
-    val old = pairs.map { case (k, _) => k -> spark.conf.get(k) }
-    pairs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try f finally old.foreach { case (k, v) => spark.conf.set(k, v) }
-  }
-
   private def withNoAutoBroadcast[A](f: => A): A =
-    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1",
-      // the shared test session may predate Engine.session's builder
-      // conf; the sort-elision flag is runtime-settable
-      "spark.sql.legacy.bucketedTableScan.outputOrdering" -> "true")(f)
+    Engine.withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1")(f)
 
   test("q189 joins with zero exchanges and zero sorts under the join") {
     withNoAutoBroadcast {
@@ -87,7 +78,7 @@ class BucketStoreSpec extends AnyFunSuite {
     // filter (its heuristic only values interesting distributions /
     // orderings, not bucket pruning) — disable the auto-disable so the
     // pruning the store exists for is observable
-    withConf("spark.sql.sources.bucketing.autoBucketedScan.enabled" -> "false") {
+    Engine.withConf(spark, "spark.sql.sources.bucketing.autoBucketedScan.enabled" -> "false") {
       val li = spark.table(BucketStore.tableName(dir, "lineitem"))
       val k = li.select(min(col("l_orderkey"))).head().getLong(0)
       val p = plan(li.filter(col("l_orderkey") === lit(k)))

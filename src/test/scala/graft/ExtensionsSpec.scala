@@ -76,7 +76,6 @@ class ExtensionsSpec extends AnyFunSuite {
   }
 
   test("sketch aggregates are SQL-callable with the Column-API semantics") {
-    Functions.registerAll(spark)
     import spark.implicits._
     val items = (Seq.fill(60)("hot") ++ (1 to 30).map(i => s"u$i")).toDF("item")
     items.createOrReplaceTempView("sql_agg_items")
@@ -88,6 +87,11 @@ class ExtensionsSpec extends AnyFunSuite {
       "SELECT count_min(item) AS g FROM sql_agg_items")
       .collect()(0).getSeq[Long](0)
     assert(cm.sum == 90L * graft.functions.CountMinAgg.D)
+    val kmv = spark.sql(
+      """SELECT kmv_sample(struct(stable_hash64(item), CAST(length(item) AS BIGINT)), 2) AS s
+        |FROM sql_agg_items""".stripMargin)
+      .collect()(0).getSeq[Long](0)
+    assert(kmv.size == 2 && kmv == kmv.sorted, kmv)
     // k must be a literal — a column reference is rejected at plan time
     val err = intercept[Exception](
       spark.sql("SELECT misra_gries(item, length(item)) FROM sql_agg_items")

@@ -142,7 +142,6 @@ class SnapshotSpjSpec extends AnyFunSuite {
 
   test("the catalog table declares the bucket transform; a mixed store declares none and degrades safely") {
     val (left, _) = SnapshotStore.ensureBucketedPair(spark, dir)
-    SnapshotStore.catalogName(spark, left) // registers the catalog conf
     val cur = SnapshotStore.currentSnapshot(spark, left)
     assert(SnapshotStore.bucketSpecOf(spark, left, cur)
       .contains((SnapshotStore.BkBuckets, "doc_id")))

@@ -260,6 +260,25 @@ class SnapshotTableSourceSpec extends AnyFunSuite {
       "the 1-D store has no string bounds to prune on")
   }
 
+  test("category bounds compare in Spark's UTF-8 order, not Java's UTF-16 order") {
+    // U+FF21 sorts BELOW U+1F600 in UTF-8 bytes (Spark's min/max) but
+    // ABOVE its surrogate pair in UTF-16 units; both land in the last
+    // range-laid file, whose bounds then straddle the two orders
+    import spark.implicits._
+    val root = java.nio.file.Files.createTempDirectory("graft_catutf8_").toString
+    val cats = Seq.fill(100)("a") ++ Seq("\uFF21", "\uD83D\uDE00")
+    SnapshotStore.appendClustered(spark, root,
+      cats.zipWithIndex.map { case (c, i) => (i.toLong, c) }.toDF("doc_id", "cat"), "cat")
+    val cur = SnapshotStore.currentSnapshot(spark, root)
+    for (v <- Seq("\uFF21", "\uD83D\uDE00")) {
+      assert(SnapshotStore.readCat(spark, root, cur, v).count() == 1L,
+        s"readCat pruned the file holding $v")
+      assert(load(root).filter(col("cat") === v).count() == 1L,
+        s"the connector pruned the file holding $v")
+      assert(load(root).filter(col("cat").isin("\uFF21", "\uD83D\uDE00")).count() == 2L)
+    }
+  }
+
   test("reported statistics: manifest-derived rows/bytes shrink under a pushed range; q240's join auto-broadcasts OUR side") {
     val root = SnapshotStore.ensure(spark, dir)
     def relStats(df: org.apache.spark.sql.DataFrame) =
@@ -450,7 +469,7 @@ class SnapshotTableSourceSpec extends AnyFunSuite {
 
   test("metadata tables: <store>.snapshots/.files/.refs readable as plain SQL") {
     val root = SnapshotStore.ensure(spark, dir)
-    val tbl = SnapshotStore.catalogName(spark, root) // registers the catalog
+    val tbl = SnapshotStore.catalogName(spark, root)
     val name = tbl.stripPrefix("graft_snap.")
     val snaps = spark.sql(
       s"SELECT * FROM graft_snap.$name.snapshots ORDER BY snapshot_id")
